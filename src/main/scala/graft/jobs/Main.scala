@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.config.PipelineConfig
+import graft.config.{LayoutPolicy, PipelineConfig}
 import graft.ledger.{LocalJsonLedger, RunId}
 import graft.orchestrate.Orchestrator
 import graft.sources.{JdbcSnapshotSource, ParquetSource, SourceReader}
@@ -48,61 +48,59 @@ object Main {
       opts.getOrElse(k, sys.error(s"missing required argument $k\n$Usage"))
     val pipelinesDir = Paths.get(req("--pipelines-dir"))
     val jobSrc = req("--job_src")
-    val layer = opts.getOrElse("--layer", "e2e")
-
     val cfg = PipelineConfig.loadAll(pipelinesDir).find(_.jobSrc == jobSrc)
       .getOrElse(sys.error(s"no pipeline with job_src '$jobSrc' under $pipelinesDir"))
-    val runId = opts.getOrElse("--run-id", RunId())
+    val spark = graft.GraftSession(cfg.displayName)
+    try println(runLayer(spark, cfg, opts))
+    finally spark.stop()
+  }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events fixture is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .appName(cfg.displayName)
-      .getOrCreate()
-    try {
-      val ledger = new LocalJsonLedger(
-        Paths.get(cfg.rawRoot, "_ledger", cfg.ledgerName))
-      val source: SourceReader =
-        if (cfg.cdsView.endsWith(".parquet")) ParquetSource(cfg.cdsView)
-        else JdbcSnapshotSource(
-          url = sys.env.getOrElse("GRAFT_JDBC_URL", sys.error("GRAFT_JDBC_URL unset for JDBC pipeline")),
-          driver = sys.env.getOrElse("GRAFT_JDBC_DRIVER", "com.mysql.cj.jdbc.Driver"),
-          dbSchema = sys.env.getOrElse("GRAFT_JDBC_SCHEMA", "test"),
-          view = cfg.cdsView) // credentials: EnvCredentials default (GRAFT_JDBC_USER/_PASSWORD)
-      layer match {
-        case "raw" =>
-          val m = Orchestrator.ingest(spark, cfg, source, ledger, runId)
-          println(s"[raw_layer_job] runId=${m.runId} rows=${m.rows} path=${m.path}")
-        case "prepared" =>
-          val ms = Orchestrator.drain(spark, cfg, ledger)
-          ms.foreach(m => println(s"[prepared_layer_job] promoted runId=${m.runId} rows=${m.rows} -> ${m.path}"))
-          if (ms.isEmpty) println("[prepared_layer_job] nothing pending")
-        case "e2e" =>
-          val table = Orchestrator.runEndToEnd(spark, cfg, source, ledger, runId)
-          println(s"[e2e] runId=$runId table=$table rows=${spark.table(table).count()}")
-        case "compact" =>
-          val targetBytes = opts.get("--target-file-bytes").map(_.toLong)
-            .getOrElse(128L << 20)
-          val m = CompactionJob.run(spark, cfg.preparedPath, targetBytes)
-          println(s"[compaction_job] path=${cfg.preparedPath} files=${m.filesBefore}->${m.filesAfter} " +
-            s"bytes=${m.bytes} rows=${m.rows.map(_.toString).getOrElse("-")} rewritten=${m.rewritten}")
-        case "cluster" | "zorder" =>
-          val targetBytes = opts.get("--target-file-bytes").map(_.toLong)
-            .getOrElse(128L << 20)
-          val cols = opts.getOrElse("--cluster-by",
-            sys.error(s"--layer $layer requires --cluster-by <col[,col...]>"))
-            .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-          val m =
-            if (layer == "zorder") LayoutJob.zorderBy(spark, cfg.preparedPath, cols, targetBytes)
-            else LayoutJob.clusterBy(spark, cfg.preparedPath, cols, targetBytes)
-          println(s"[layout_job] mode=$layer path=${cfg.preparedPath} clusterBy=${m.clusterBy.mkString(",")} " +
-            s"files=${m.filesBefore}->${m.filesAfter} rows=${m.rows}")
-        case other => sys.error(s"unknown --layer '$other' (raw|prepared|e2e|compact|cluster|zorder)")
+  /** Run the `--layer` (default `e2e`) that `opts` names for `cfg` on
+    * `spark`, and return its one-line report. The maintenance layers
+    * (`compact`, `cluster`, `zorder`) go through
+    * [[Orchestrator.rewritePrepared]], so a log-backed pipeline is
+    * rewritten through its manifest exactly as scheduled maintenance
+    * does it. */
+  def runLayer(spark: SparkSession, cfg: PipelineConfig,
+      opts: Map[String, String]): String = {
+    val layer = opts.getOrElse("--layer", "e2e")
+    val runId = opts.getOrElse("--run-id", RunId())
+    val ledger = new LocalJsonLedger(
+      Paths.get(cfg.rawRoot, "_ledger", cfg.ledgerName))
+    def source: SourceReader =
+      if (cfg.cdsView.endsWith(".parquet")) ParquetSource(cfg.cdsView)
+      else JdbcSnapshotSource(
+        url = sys.env.getOrElse("GRAFT_JDBC_URL", sys.error("GRAFT_JDBC_URL unset for JDBC pipeline")),
+        driver = sys.env.getOrElse("GRAFT_JDBC_DRIVER", "com.mysql.cj.jdbc.Driver"),
+        dbSchema = sys.env.getOrElse("GRAFT_JDBC_SCHEMA", "test"),
+        view = cfg.cdsView) // credentials: EnvCredentials default (GRAFT_JDBC_USER/_PASSWORD)
+    val targetBytes = opts.get("--target-file-bytes").map(_.toLong)
+      .getOrElse(128L << 20)
+    def maintain(job: String, policy: Option[LayoutPolicy]): String =
+      Orchestrator.rewritePrepared(spark, cfg, policy, targetBytes) match {
+        case Some(m) => s"[$job] mode=$layer path=${cfg.preparedPath} " +
+          s"files=${m.filesBefore}->${m.filesAfter} rewritten=true"
+        case None => s"[$job] mode=$layer path=${cfg.preparedPath} rewritten=false"
       }
-    } finally spark.stop()
+    layer match {
+      case "raw" =>
+        val m = Orchestrator.ingest(spark, cfg, source, ledger, runId)
+        s"[raw_layer_job] runId=${m.runId} rows=${m.rows} path=${m.path}"
+      case "prepared" =>
+        val ms = Orchestrator.drain(spark, cfg, ledger)
+        if (ms.isEmpty) "[prepared_layer_job] nothing pending"
+        else ms.map(m => s"[prepared_layer_job] promoted runId=${m.runId} " +
+          s"rows=${m.rows} -> ${m.path}").mkString("\n")
+      case "e2e" =>
+        val table = Orchestrator.runEndToEnd(spark, cfg, source, ledger, runId)
+        s"[e2e] runId=$runId table=$table rows=${spark.table(table).count()}"
+      case "compact" => maintain(CompactionJob.JobName, None)
+      case "cluster" | "zorder" =>
+        val cols = opts.getOrElse("--cluster-by",
+          sys.error(s"--layer $layer requires --cluster-by <col[,col...]>"))
+          .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+        maintain(LayoutJob.JobName, Some(LayoutPolicy(cols, zorder = layer == "zorder")))
+      case other => sys.error(s"unknown --layer '$other' (raw|prepared|e2e|compact|cluster|zorder)")
+    }
   }
 }

@@ -60,8 +60,8 @@ object Relational {
 
   /** The events table with `ts` normalized to µs TimestampType (see
     * [[normalizeEventTs]]). The nanosAsLong conf is set at session build
-    * time by every entry point we own (Bench/Verify/RunOne/Smoke/Main/
-    * TestSpark); the guarded set below is a defensive fallback for
+    * time by every entry point we own (the mains through
+    * [[graft.GraftSession]], and TestSpark); the guarded set below is a defensive fallback for
     * caller-supplied sessions only, so the live session conf isn't
     * re-mutated on every query (racy under concurrent queries in one
     * session). */
@@ -77,8 +77,8 @@ object Relational {
     * scan's hadoopConf), which runs only when the driver materializes
     * the returned frame — after the query function returned, so a
     * save/restore would un-set it before it is read. Every entry point
-    * we own sets it at session BUILD time (Bench/Verify/RunOne/Smoke/
-    * Main/TestSpark); this guarded set is the defensive fallback for
+    * we own sets it at session BUILD time ([[graft.GraftSession]],
+    * TestSpark); this guarded set is the defensive fallback for
     * caller-supplied sessions. Order-independence-safe by
     * construction: monotonic (every reader requires the same value)
     * and idempotent. */

@@ -1,10 +1,11 @@
 package graft.orchestrate
 
 import graft.catalog.CatalogRegistrar
-import graft.config.PipelineConfig
+import graft.config.{LayoutPolicy, PipelineConfig}
 import graft.jobs.{CompactionJob, JobMetrics, LayoutJob, LogMaintenanceMetrics, MaintenanceMetrics, PreparedLayerJob, RawLayerJob}
 import graft.ledger.{LocalJsonLedger, RunLedger, RunState}
 import graft.sources.SourceReader
+import graft.table.SnapshotLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -68,9 +69,13 @@ object Orchestrator {
     * Single-writer per pipeline by construction: [[drain]] is
     * synchronous and [[watch]]'s foreachBatch serializes batches, so
     * maintenance never races a concurrent append to the same prefix.
+    * On a log table every pending delete or rename (deletion vectors,
+    * key tombstones, old schema epochs) is applied first, on every
+    * check and whatever the file count, so the catalog view — which
+    * reads the raw live files — never shows it unapplied.
     * Idempotent at the threshold gate: a rewrite leaves ≤ maxFiles
-    * files, so an immediate re-check fires nothing. Returns the metrics
-    * of each rewrite that actually happened, keyed by path. */
+    * files, so an immediate re-check fires nothing. Returns, keyed by
+    * path, the metrics of the last rewrite that actually happened. */
   def maybeCompact(spark: SparkSession, cfg: PipelineConfig,
       maxFiles: Int = DefaultCompactAfterFiles,
       advisor: Option[LayoutAdvisor] = None): Map[String, MaintenanceMetrics] = {
@@ -100,68 +105,59 @@ object Orchestrator {
     // log-backed (the threshold reads the MANIFEST's live-file count —
     // no listing — and the rewrite commits as a `replace`, no swap
     // window); verified-swap jobs on the bare directory otherwise
-    val prepared: Option[(String, MaintenanceMetrics)] =
+    val prepared: Option[MaintenanceMetrics] =
       if (cfg.useLog) {
         val probe = graft.table.PreparedTable.log(spark, cfg)
         if (probe.currentVersion() == 0) None
         else {
           val snap0 = probe.snapshot()
-          val before = snap0.files.length
-          if (before <= maxFiles) {
-            // no file-count pressure, but merge-on-read / rename debt
-            // still drains on the schedule: targeted rewrites of ONLY
-            // the covered files — O(debt), never O(table)
+          // merge-on-read / rename debt drains on EVERY check, whatever
+          // the file count: the catalog view reads the raw live files, so
+          // pending deletion vectors or old-epoch files would show deleted
+          // rows or null renamed columns there. Targeted rewrites of ONLY
+          // the covered files — O(debt), never O(table); key tombstones
+          // clear only in a full rewrite, which the file-count step below
+          // then runs whatever the count (compactSmall delegates to the
+          // full compact, cluster/zorder always rewrite everything)
+          val drained =
             if (snap0.dvs.isEmpty && snap0.fileSchemaIdx.isEmpty) None
             else {
-              val log = graft.table.PreparedTable.log(spark, cfg)
-              log.materializeDeletes().orElse(log.materializeRenames())
-                .map(s => cfg.preparedPath ->
-                  LogMaintenanceMetrics(before, s.files.length, s.rows, s.op))
+              val deletes = probe.materializeDeletes()
+              probe.materializeRenames().orElse(deletes)
             }
-          }
-          else {
-            // log scans are explicit file lists, tallied under data/
-            val scanRoot =
-              s"${cfg.preparedPath}/${graft.table.SnapshotLog.DataDirName}"
-            val schema = probe.read().schema
-            val policy = policyFor(scanRoot, schema)
-            // advised mode also adopts the advisor's BLOOM nominations,
-            // and an advised cluster policy doubles as the manifest
-            // stats columns (a declared layout already does, via
-            // cfg.statsColumns): the maintenance rewrite re-stages
-            // every file, so building the log with them indexes the
-            // whole table in one pass; declared lists always win
-            val advisedBlooms =
-              if (cfg.layoutAdvised && cfg.bloomColumns.isEmpty)
-                advisor.map(_.adviseBlooms(qualify(spark, scanRoot), schema))
-                  .getOrElse(Nil)
-              else Nil
-            val advisedStats =
-              if (cfg.statsColumns.isEmpty) policy.map(_.columns).getOrElse(Nil)
-              else Nil
-            val log = graft.table.PreparedTable.log(spark, cfg,
-              advisedBlooms, advisedStats)
-            val committed = policy match {
-              case Some(p) if p.zorder => Some(LayoutJob.zorderByLog(log, p.columns))
-              case Some(p) => Some(LayoutJob.clusterByLog(log, p.columns))
-              // no layout policy: incremental bin-pack — only the
-              // undersized backlog rewrites, well-sized files carry by
-              // name (falls back to the full rewrite only to materialize
-              // pending key tombstones)
-              case None => log.compactSmall()
+          val snap = drained.getOrElse(snap0)
+          val rewrite =
+            if (snap.tombstones.isEmpty && snap.files.length <= maxFiles) None
+            else {
+              // log scans are explicit file lists, tallied under data/
+              val scanRoot =
+                s"${cfg.preparedPath}/${graft.table.SnapshotLog.DataDirName}"
+              val schema = probe.read().schema
+              val policy = policyFor(scanRoot, schema)
+              // advised mode also adopts the advisor's BLOOM nominations,
+              // and an advised cluster policy doubles as the manifest
+              // stats columns (a declared layout already does, via
+              // cfg.statsColumns): the maintenance rewrite re-stages
+              // every file, so building the log with them indexes the
+              // whole table in one pass; declared lists always win
+              val advisedBlooms =
+                if (cfg.layoutAdvised && cfg.bloomColumns.isEmpty)
+                  advisor.map(_.adviseBlooms(qualify(spark, scanRoot), schema))
+                    .getOrElse(Nil)
+                else Nil
+              val advisedStats =
+                if (cfg.statsColumns.isEmpty) policy.map(_.columns).getOrElse(Nil)
+                else Nil
+              rewritePrepared(spark, cfg, policy, incremental = true,
+                log = Some(graft.table.PreparedTable.log(spark, cfg,
+                  advisedBlooms, advisedStats)))
             }
-            committed.map(s => cfg.preparedPath ->
-              LogMaintenanceMetrics(before, s.files.length, s.rows, s.op))
-          }
+          rewrite.orElse(drained.map(s =>
+            LogMaintenanceMetrics(snap0.files.length, s.files.length, s.rows, s.op)))
         }
       } else if (overThreshold(cfg.preparedPath)) {
-        val m: MaintenanceMetrics = policyFor(cfg.preparedPath,
-          spark.read.parquet(cfg.preparedPath).schema) match {
-          case Some(p) if p.zorder => LayoutJob.zorderBy(spark, cfg.preparedPath, p.columns)
-          case Some(p) => LayoutJob.clusterBy(spark, cfg.preparedPath, p.columns)
-          case None => CompactionJob.run(spark, cfg.preparedPath)
-        }
-        Some(cfg.preparedPath -> m).filter(_._2.rewritten)
+        rewritePrepared(spark, cfg, policyFor(cfg.preparedPath,
+          spark.read.parquet(cfg.preparedPath).schema))
       } else None
     // the fingerprint index also grows a file per promotion; it is
     // probed by hash equality, so plain compaction regardless of format
@@ -170,8 +166,43 @@ object Orchestrator {
       .map(_ => cfg.fingerprintIndexPath ->
         (CompactionJob.run(spark, cfg.fingerprintIndexPath): MaintenanceMetrics))
       .filter(_._2.rewritten)
-    (prepared.toSeq ++ fpIndex.toSeq).toMap
+    (prepared.map(cfg.preparedPath -> _).toSeq ++ fpIndex.toSeq).toMap
   }
+
+  /** The one policy → rewrite choice for a pipeline's prepared layer,
+    * routed by table format; [[maybeCompact]] and the maintenance layers
+    * of [[graft.jobs.Main]] both go through it. With a layout policy: a
+    * z-order or range-cluster rewrite on the policy's columns. Without
+    * one: a bin-pack — on a log table the incremental `compactSmall`
+    * when `incremental` (only the undersized backlog rewrites) and the
+    * full `compact` otherwise, on a bare directory [[CompactionJob]].
+    * Log rewrites commit through `log` (default: the pipeline's plain
+    * handle) as a manifest `replace`, with no swap window; directory
+    * rewrites verify and swap. None when the pass rewrote nothing. */
+  def rewritePrepared(spark: SparkSession, cfg: PipelineConfig,
+      policy: Option[LayoutPolicy], targetBytes: Long = 128L << 20,
+      incremental: Boolean = false,
+      log: Option[SnapshotLog] = None): Option[MaintenanceMetrics] =
+    if (cfg.useLog) {
+      val table = log.getOrElse(graft.table.PreparedTable.log(spark, cfg))
+      val before = table.snapshot().files.length
+      val committed = policy match {
+        case Some(p) if p.zorder =>
+          Some(LayoutJob.zorderByLog(table, p.columns, targetBytes))
+        case Some(p) => Some(LayoutJob.clusterByLog(table, p.columns, targetBytes))
+        case None if incremental => table.compactSmall(targetBytes)
+        case None => table.compact(targetBytes)
+      }
+      committed.map(s => LogMaintenanceMetrics(before, s.files.length, s.rows, s.op))
+    } else {
+      val m: MaintenanceMetrics = policy match {
+        case Some(p) if p.zorder =>
+          LayoutJob.zorderBy(spark, cfg.preparedPath, p.columns, targetBytes)
+        case Some(p) => LayoutJob.clusterBy(spark, cfg.preparedPath, p.columns, targetBytes)
+        case None => CompactionJob.run(spark, cfg.preparedPath, targetBytes)
+      }
+      Some(m).filter(_.rewritten)
+    }
 
   /** A path in the fully-qualified form the scan listener records
     * (`FileSourceScanExec` root paths are qualified, e.g. `file:/…`). */

@@ -278,6 +278,84 @@ class PipelineSpec extends AnyFunSuite {
       !fin.columns.contains("l_returnflag"))
   }
 
+  test("jobs.Main maintenance layers rewrite a log pipeline through its manifest") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-log-cli-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    (1 to 2).foreach(i => RawLayerJob.run(spark, cfg, src, ledger, s"run$i"))
+    Orchestrator.drain(spark, cfg, ledger)
+    def log = graft.table.PreparedTable.log(spark, cfg)
+    assert(log.currentVersion() >= 2 && log.snapshot().files.length >= 2)
+    val rows = 2 * fixtureRows(spark)
+    Seq("compact" -> "", "cluster" -> "l_orderkey",
+        "zorder" -> "l_orderkey,l_partkey").foreach { case (layer, cols) =>
+      val v0 = log.currentVersion()
+      graft.jobs.Main.runLayer(spark, cfg,
+        Map("--layer" -> layer) ++ Option(cols).filter(_.nonEmpty).map("--cluster-by" -> _))
+      val s = log.snapshot()
+      assert(s.version == v0 + 1 && s.op == layer,
+        s"--layer $layer must commit one `$layer` version, head is v${s.version} ${s.op}")
+      if (layer == "compact") assert(s.files.length == 1, "compact packs to one file")
+      val t = log.read()
+      assert(t.count() == rows, s"--layer $layer changed the row count")
+      assert(t.select("ETL_PART_KEY").distinct().count() == 2)
+      val leftovers = new java.io.File(cfg.preparedRoot).listFiles().map(_.getName)
+        .filter(n => n.endsWith(".compact.tmp") || n.endsWith(".compact.bak"))
+      assert(leftovers.isEmpty, s"--layer $layer left ${leftovers.mkString(", ")}")
+    }
+  }
+
+  test("drain above the file threshold applies a pending deletion vector before registering the view") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-log-dv-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    (1 to 3).foreach(i => RawLayerJob.run(spark, cfg, src, ledger, s"run$i"))
+    Orchestrator.drain(spark, cfg, ledger)
+    val log = graft.table.PreparedTable.log(spark, cfg)
+    val k = log.read().agg(org.apache.spark.sql.functions
+      .min("l_orderkey")).head().getLong(0)
+    val kRows = log.read().where(col("l_orderkey") === k).count() / 3
+    // sparse predicate delete, auto planner: commits deletion vectors
+    log.deleteWhere(("l_orderkey", k, k))
+    assert(log.snapshot().dvs.nonEmpty, "a sparse delete must commit as a vector")
+    RawLayerJob.run(spark, cfg, src, ledger, "run4")
+    Orchestrator.drain(spark, cfg, ledger, compactAfterFiles = 2)
+    val view = spark.table(s"${graft.catalog.CatalogRegistrar.Database}.${cfg.tableName}")
+    // only run4's fresh copy of key k survives; runs 1-3's are deleted
+    val ks = view.where(col("l_orderkey") === k).select("ETL_PART_KEY")
+      .collect().map(_.getString(0)).toSeq
+    assert(ks.size == kRows && ks.forall(_ == "run4"),
+      s"the catalog view shows deleted rows of key $k: ${ks.groupBy(identity).map { case (r, v) => r -> v.size }}")
+    assert(view.count() == 4 * fixtureRows(spark) - 3 * kRows)
+    assert(log.snapshot().dvs.isEmpty, "the vectors must materialize on drain")
+  }
+
+  test("drain below the file threshold applies pending key tombstones before registering the view") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-log-tomb-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    (1 to 2).foreach(i => RawLayerJob.run(spark, cfg, src, ledger, s"run$i"))
+    Orchestrator.drain(spark, cfg, ledger)
+    val log = graft.table.PreparedTable.log(spark, cfg)
+    val k = log.read().agg(org.apache.spark.sql.functions
+      .min("l_orderkey")).head().getLong(0)
+    val kRows = log.read().where(col("l_orderkey") === k).count() / 2
+    log.deleteKeys("l_orderkey", spark.range(k, k + 1).toDF("l_orderkey"))
+    assert(log.snapshot().tombstones.nonEmpty)
+    RawLayerJob.run(spark, cfg, src, ledger, "run3")
+    Orchestrator.drain(spark, cfg, ledger) // default threshold: no file-count pressure
+    val view = spark.table(s"${graft.catalog.CatalogRegistrar.Database}.${cfg.tableName}")
+    val ks = view.where(col("l_orderkey") === k).select("ETL_PART_KEY")
+      .collect().map(_.getString(0)).toSeq
+    assert(ks.size == kRows && ks.forall(_ == "run3"),
+      s"the catalog view shows tombstoned rows of key $k")
+    assert(view.count() == 3 * fixtureRows(spark) - 2 * kRows)
+    assert(log.snapshot().tombstones.isEmpty, "tombstones must materialize on drain")
+  }
+
   test("partitioned prepared layer: promotions route through the declared transforms") {
     val spark = TestSpark.spark
     val tmp = Files.createTempDirectory("graft-log-part-")
